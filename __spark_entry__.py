@@ -59,7 +59,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     root = os.path.join(tempfile.gettempdir(), "crba_entry_table")
     shutil.rmtree(root, ignore_errors=True)
-    engine = CDCEngine(spark, root, n_buckets=8, mode="mor")
+    engine = CDCEngine(spark, root, n_buckets=8)
     cdc = _events_as_cdc(spark, sf_dir)
     for k in range(4):
         engine.apply_epoch(cdc.filter(F.col("epoch") == k), k)

@@ -174,7 +174,7 @@ def warm_until_plateau(
     for i in range(max_iters):
         root = os.path.join(base, f"crba_bench_warm_{tag}_{i}")
         _sh.rmtree(root, ignore_errors=True)
-        res = CDCEngine(spark, root, n_buckets=32, mode="mor").replay(wdir)
+        res = CDCEngine(spark, root, n_buckets=32).replay(wdir)
         _sh.rmtree(root, ignore_errors=True)
         e = res["per_epoch"][0]
         rates.append(round(e["events_in"] / e["apply_s"], 1))
@@ -239,7 +239,7 @@ def aligned_compare(spark, base: str) -> dict:
             for mode_name, aligned in (("repartition", False), ("aligned", True)):
                 root = os.path.join(base, f"crba_bench_alcmp_{mode_name}")
                 _sh.rmtree(root, ignore_errors=True)
-                eng = CDCEngine(spark, root, n_buckets=32, mode="mor")
+                eng = CDCEngine(spark, root, n_buckets=32)
                 t0 = time.monotonic()
                 n = 0
                 for k in epochs:
@@ -272,7 +272,7 @@ def run_replay(spark, table_root: str) -> dict:
     from crba_etl_spark.engine import CDCEngine
 
     shutil.rmtree(table_root, ignore_errors=True)
-    eng = CDCEngine(spark, table_root, n_buckets=32, mode="mor")
+    eng = CDCEngine(spark, table_root, n_buckets=32)
     res = eng.replay(stream_dir())
     return res
 

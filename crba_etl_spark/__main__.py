@@ -13,7 +13,7 @@ where ``run_cdc.py`` just calls :func:`main`. In local mode plain
 creates local[*]).
 
 Commands:
-    replay   --events DIR --table DIR [--mode mor|cow] [--n-buckets N]
+    replay   --events DIR --table DIR [--n-buckets N]
              [--lsh-index] [--dedup-labels]   (maintained index artifacts)
     resume   --events DIR --table DIR          (skip committed epochs)
     stream   --events DIR --table DIR --checkpoint DIR   (readStream tail)
@@ -38,7 +38,6 @@ def main(argv: list[str] | None = None) -> int:
     def common(p):
         p.add_argument("--table", required=True)
         p.add_argument("--n-buckets", type=int, default=32)
-        p.add_argument("--mode", choices=["mor", "cow"], default="mor")
         p.add_argument("--quarantine", choices=["lazy", "eager", "off"], default="lazy")
         p.add_argument("--master", default=None)
         # maintained aux artifacts (band_index.py): opt-in, committed
@@ -93,7 +92,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         args.table,
         n_buckets=args.n_buckets,
-        mode=args.mode,
         quarantine=quarantine,
         lsh_index=getattr(args, "lsh_index", False),
         dedup_labels=getattr(args, "dedup_labels", False),

@@ -583,8 +583,7 @@ class DedupLabels:
         # verification corpus: batch text (an updated doc verifies
         # against its CURRENT text) + candidate partners' stored text,
         # scanned only in the buckets the partners live in (distinct
-        # bucket ids are <= n_buckets — a tiny driver collect, same
-        # precedent as the COW merge's affected-bucket pruning)
+        # bucket ids are <= n_buckets — a tiny driver collect)
         kc = self.table.key_cols()
         ftype = self.table.schema()[kc[0]].dataType
         conv = (

@@ -1,7 +1,7 @@
 """CDC engine orchestrator: epoch-at-a-time apply with exactly-once commit.
 
 The lifecycle (SURVEY.md §3.1 graft mapping): change tail → per epoch:
-LSN dedup → latest-per-key reduce → partition-pruned MERGE → atomic
+LSN dedup → latest-per-key reduce → merge-on-read delta write → atomic
 commit (data + schema + epoch marker in one rename) → metrics row.
 Re-delivered epochs are detected from the snapshot's committed-epoch set
 and skipped (idempotent). Resume = replay; committed epochs no-op, so a
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, types as T
 from .icelite import IceliteTable
 from .metrics import write_epoch_metrics
 from .operators.dedup import reduce_batch
-from .operators.merge import apply_delta_epoch, merge_epoch
+from .operators.merge import _skip_stats, apply_delta_epoch
 from .schema import TRANSCRIPT
 
 _EPOCH_DIR = re.compile(r"^epoch=(\d+)$")
@@ -96,8 +96,6 @@ class CDCEngine:
         payload_schema: T.StructType = TRANSCRIPT,
         n_buckets: int = 32,
         quarantine: str | bool = "lazy",
-        mode: str = "mor",
-        compact_every: int | None = None,
         max_deltas_per_bucket: int = 16,
         max_delta_bytes_per_bucket: int | None = None,
         lsh_index: bool = False,
@@ -108,22 +106,14 @@ class CDCEngine:
         reliable_cc_checkpoints: bool = False,
         labels_compact_epochs: int = 16,
     ):
-        """``mode`` picks the apply strategy (both yield identical final
-        state; both are tested against the same oracle):
-
-        - ``"mor"`` (merge-on-read, default): each epoch appends per-bucket
-          delta files — apply cost O(batch) regardless of table size; reads
-          resolve max-LSN per key; compaction folds deltas into the base
-          when a bucket accumulates ``max_deltas_per_bucket`` delta files,
-          ``max_delta_bytes_per_bucket`` delta bytes (size-tiered — epochs
-          vary in size, so a byte threshold tracks actual read
-          amplification where a file count cannot), or every
-          ``compact_every`` epochs if set. All three are driver-local
-          metadata checks (manifest + file sizes), zero Spark jobs.
-        - ``"cow"`` (copy-on-write): each epoch eagerly merges and rewrites
-          the affected buckets — reads are pure scans, but apply cost grows
-          with table size. Right when batches are huge relative to the
-          table or reads vastly outnumber writes.
+        """Apply is merge-on-read: each epoch appends per-bucket delta files
+        — apply cost O(batch) regardless of table size; reads resolve
+        max-LSN per key; compaction folds deltas into the base when a
+        bucket accumulates ``max_deltas_per_bucket`` delta files or
+        ``max_delta_bytes_per_bucket`` delta bytes (size-tiered — epochs
+        vary in size, so a byte threshold tracks actual read
+        amplification where a file count cannot). Both are driver-local
+        metadata checks (manifest + file sizes), zero Spark jobs.
 
         ``quarantine`` controls stale/low-LSN event auditing:
 
@@ -132,8 +122,7 @@ class CDCEngine:
           cost (measured: eager auditing costs ~3x apply throughput,
           because it re-scans the table every epoch → O(table²) total).
         - ``"eager"``: per-epoch audit; the quarantine table for epoch k is
-          complete the moment k commits (COW mode audits eagerly for free —
-          the merge join already sees both sides).
+          complete the moment k commits.
         - ``False``: off.
 
         ``lsh_index=True`` maintains the persisted MinHash band index
@@ -190,21 +179,18 @@ class CDCEngine:
         resolution scan (``DedupLabels.read``) grows with the delta
         count between compactions (the second residual-floor component
         in BENCH/INDEX_OVERHEAD.md, round-6 VERDICT #2). When the
-        number of per-epoch delta sets reaches this threshold,
-        :meth:`compact` folds them into one resolved set automatically
-        (lost-update-safe CAS, content identical by construction) —
+        number of per-epoch delta sets reaches this threshold, the check
+        that runs after every applied epoch folds them into one resolved
+        set (lost-update-safe CAS, content identical by construction) —
         read-amplification maintenance as a property of the table's
         state, exactly like the data table's ``max_deltas_per_bucket``.
         Set ≤0 to disable.
         """
-        assert mode in ("mor", "cow")
         if quarantine is True:
             quarantine = "lazy"
         assert quarantine in ("lazy", "eager", False, None)
         self.spark = spark
-        self.mode = mode
         self.quarantine = quarantine or None
-        self.compact_every = compact_every
         self.max_deltas_per_bucket = max_deltas_per_bucket
         self.max_delta_bytes_per_bucket = max_delta_bytes_per_bucket
         self.stale_rebuild_threshold = stale_rebuild_threshold
@@ -214,7 +200,6 @@ class CDCEngine:
             os.path.join(table_root, "quarantine") if quarantine else None
         )
         self.metrics_dir = os.path.join(table_root, "metrics")
-        self._applied_since_compact = 0
         if lsh_index or dedup_labels:
             from .band_index import DEFAULT_MAX_BUCKET, DedupLabels, LshBandIndex
 
@@ -262,7 +247,7 @@ class CDCEngine:
         file names in the snapshot so completeness can be decided from
         the cumulative union across slices (see streaming/tail.py).
 
-        ``source_aligned=True`` (MOR mode): the caller guarantees the
+        ``source_aligned=True``: the caller guarantees the
         events are ALREADY clustered by the table's bucket function —
         a Spark table bucketed by (n_buckets, conv_id), or a keyed
         Kafka topic with partitions = buckets (icelite.bucket_expr is
@@ -276,38 +261,18 @@ class CDCEngine:
         misaligned input: Catalyst inserts the missing exchange for
         the reduce and the write assigns buckets by VALUE, so the
         penalty is extra files per bucket — never wrong rows."""
-        if slice_marker is not None:
-            if slice_marker in self.table.committed_slices():
-                if mark_epoch and epoch not in self.table.committed_epochs():
-                    # a retried slice can be the FIRST to know the epoch
-                    # is complete (late _DONE marker): the data skip must
-                    # still land the exactly-once epoch marker, or it is
-                    # permanently missed (round-3 ADVICE)
-                    self.table.mark_epoch_committed(epoch)
-                    return {
-                        "epoch": epoch,
-                        "skipped": True,
-                        "reason": "slice committed; epoch marker promoted",
-                    }
-                return {"epoch": epoch, "skipped": True, "reason": "slice committed"}
-            if epoch in self.table.committed_epochs():
-                # a committed epoch's declared file set is fully covered,
-                # so every slice of it — even under a fresh checkpoint's
-                # renumbered markers — is redundant by the _DONE contract
-                return {"epoch": epoch, "skipped": True, "reason": "already committed"}
-        elif epoch in self.table.committed_epochs():
-            return {"epoch": epoch, "skipped": True, "reason": "already committed"}
+        # one manifest read decides the skip; a retried slice that is the
+        # FIRST to know its epoch is complete (late _DONE marker) still
+        # lands the exactly-once epoch marker (round-3 ADVICE)
+        snap = self.table.snapshot()
+        if IceliteTable._already_committed(snap, epoch, slice_marker):
+            return _skip_stats(self.table, snap, epoch, slice_marker, mark_epoch)
 
         obs = Observation(f"events-in-{epoch}")
         events = events.observe(obs, *_count_alias())
         from pyspark.sql import functions as F
 
-        pre_partitioned = self.mode == "mor"
-        if pre_partitioned and source_aligned:
-            # producer already clustered rows by the bucket function —
-            # skip THE one exchange of the epoch entirely
-            pass
-        elif pre_partitioned:
+        if not source_aligned:
             # THE one exchange of the epoch: repartition(N, conv_id) with
             # N = table bucket count and bucket = pmod(hash(conv_id), N)
             # (see icelite.bucket_expr) both clusters rows for the
@@ -315,16 +280,12 @@ class CDCEngine:
             # exchange) and lands each row in its bucket's partition
             # (⇒ the bucketed delta write shuffles nothing)
             events = events.repartition(
-                self.table.n_buckets(), F.col("conv_id")
+                self.table.n_buckets(snap), F.col("conv_id")
             )
         reduced = reduce_batch(events)
-        # MOR + lazy: per-epoch audit skipped; compaction extracts stale
-        # rows from __epoch/__lsn (COW audits in the merge join anyway)
-        eager_dir = (
-            self.quarantine_dir
-            if (self.quarantine == "eager" or self.mode == "cow")
-            else None
-        )
+        # lazy: per-epoch audit skipped; compaction extracts stale rows
+        # from __epoch/__lsn
+        eager_dir = self.quarantine_dir if self.quarantine == "eager" else None
         aux_add = None
         persisted = None
         if self.lsh_index is not None:
@@ -383,31 +344,18 @@ class CDCEngine:
                     }
             reduced = persisted
         try:
-            if self.mode == "mor":
-                stats = apply_delta_epoch(
-                    self.spark,
-                    self.table,
-                    reduced,
-                    epoch,
-                    quarantine_dir=eager_dir,
-                    pre_partitioned=True,
-                    slice_marker=slice_marker,
-                    mark_epoch=mark_epoch,
-                    slice_files=slice_files,
-                    aux_add=aux_add,
-                )
-            else:
-                stats = merge_epoch(
-                    self.spark,
-                    self.table,
-                    reduced,
-                    epoch,
-                    quarantine_dir=eager_dir,
-                    slice_marker=slice_marker,
-                    mark_epoch=mark_epoch,
-                    slice_files=slice_files,
-                    aux_add=aux_add,
-                )
+            stats = apply_delta_epoch(
+                self.spark,
+                self.table,
+                reduced,
+                epoch,
+                quarantine_dir=eager_dir,
+                pre_partitioned=True,
+                slice_marker=slice_marker,
+                mark_epoch=mark_epoch,
+                slice_files=slice_files,
+                aux_add=aux_add,
+            )
         finally:
             if persisted is not None:
                 persisted.unpersist()
@@ -416,33 +364,61 @@ class CDCEngine:
             if slice_marker is not None:
                 stats["slice"] = slice_marker
             write_epoch_metrics(self.table, self.metrics_dir, stats)
-            self._applied_since_compact += 1
             self._maybe_compact()
         return stats
 
     def _maybe_compact(self) -> None:
-        if self.mode != "mor":
-            return
-        due = (
-            self.compact_every is not None
-            and self._applied_since_compact >= self.compact_every
-        )
-        if not due:
-            deltas = self.table.deltas()
+        """Read-amplification maintenance after every applied epoch, each
+        artifact on its own trigger, each check a driver-local metadata
+        read (manifest + file sizes, zero Spark jobs): the data table's
+        per-bucket deltas, then the labels artifact's per-epoch delta
+        sets — the per-epoch labels resolution (DedupLabels.read:
+        groupBy-min over every delta file) otherwise grows with their
+        count (round-6 VERDICT #2). One tag dir per epoch write; the
+        labels fold leaves exactly one."""
+        snap = self.table.snapshot()
+        deltas = snap.get("deltas", {})
+        due = any(len(v) >= self.max_deltas_per_bucket for v in deltas.values())
+        if not due and self.max_delta_bytes_per_bucket is not None:
             due = any(
-                len(v) >= self.max_deltas_per_bucket for v in deltas.values()
+                sum(os.path.getsize(os.path.join(self.table.root, f)) for f in v)
+                >= self.max_delta_bytes_per_bucket
+                for v in deltas.values()
             )
-            if not due and self.max_delta_bytes_per_bucket is not None:
-                due = any(
-                    sum(
-                        os.path.getsize(os.path.join(self.table.root, f))
-                        for f in v
-                    )
-                    >= self.max_delta_bytes_per_bucket
-                    for v in deltas.values()
-                )
         if due:
             self.compact()
+            snap = self.table.snapshot()
+        if (self.labels_compact_epochs or 0) <= 0:
+            return
+        from .band_index import (
+            AUX_NAME,
+            DEFAULT_MAX_BUCKET,
+            LABELS_AUX,
+            DedupLabels,
+            LshBandIndex,
+        )
+
+        aux = snap.get("aux", {})
+        ent = aux.get(LABELS_AUX)
+        if not ent:
+            return
+        tags = {p.split("/")[2] for p in ent.get("files", []) if "/" in p}
+        if len(tags) < self.labels_compact_epochs:
+            return
+        lcfg = ent.get("config", {})
+        labels = self.dedup_labels or DedupLabels(
+            self.table,
+            self.lsh_index
+            or LshBandIndex(
+                self.table,
+                text_col=aux.get(AUX_NAME, {})
+                .get("config", {})
+                .get("text_col", "text"),
+            ),
+            threshold=lcfg.get("threshold", 0.35),
+            max_bucket=lcfg.get("max_bucket", DEFAULT_MAX_BUCKET),
+        )
+        labels.compact(self.spark)
 
     def index_stale_frac(self) -> float:
         """Estimated stale fraction of the persisted band index:
@@ -502,7 +478,6 @@ class CDCEngine:
                 self.quarantine_dir if self.quarantine == "lazy" else None
             ),
         )
-        self._applied_since_compact = 0
         if not rebuild_indexes:
             rebuild_indexes = (
                 self.index_stale_frac() >= self.stale_rebuild_threshold
@@ -540,40 +515,6 @@ class CDCEngine:
                     labels = self.dedup_labels or DedupLabels(
                         self.table,
                         index,
-                        threshold=lcfg.get("threshold", 0.35),
-                        max_bucket=lcfg.get("max_bucket", DEFAULT_MAX_BUCKET),
-                    )
-                    labels.compact(self.spark)
-            return
-        # labels-delta auto-compaction (round-6 VERDICT #2): even without
-        # an index rebuild, fold the per-epoch label delta sets once
-        # their count reaches the threshold — the per-epoch labels
-        # resolution (DedupLabels.read: groupBy-min over every delta
-        # file) otherwise grows without bound between manual compacts.
-        # One tag dir per epoch write; compaction leaves exactly one.
-        if self.labels_compact_epochs and self.labels_compact_epochs > 0:
-            from .band_index import (
-                DEFAULT_MAX_BUCKET,
-                LABELS_AUX,
-                DedupLabels,
-                LshBandIndex,
-            )
-
-            aux = self.table.aux()
-            ent = aux.get(LABELS_AUX)
-            if ent:
-                tags = {p.split("/")[2] for p in ent.get("files", []) if "/" in p}
-                if len(tags) >= self.labels_compact_epochs:
-                    lcfg = ent.get("config", {})
-                    labels = self.dedup_labels or DedupLabels(
-                        self.table,
-                        self.lsh_index
-                        or LshBandIndex(
-                            self.table,
-                            text_col=aux.get("lsh_bands", {})
-                            .get("config", {})
-                            .get("text_col", "text"),
-                        ),
                         threshold=lcfg.get("threshold", 0.35),
                         max_bucket=lcfg.get("max_bucket", DEFAULT_MAX_BUCKET),
                     )

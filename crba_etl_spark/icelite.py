@@ -2,8 +2,8 @@
 
 No Iceberg/Delta jars exist in this environment (verified: no network,
 ``$SPARK_HOME/jars`` has neither), so ``MERGE INTO`` SQL is unavailable.
-icelite supplies, in ~200 lines of pure PySpark + JSON, exactly the three
-properties the CDC engine needs from the table layer:
+icelite supplies, in pure PySpark + JSON, exactly the three properties
+the CDC engine needs from the table layer:
 
 1. **snapshot atomicity** — readers always see a complete version: the
    only mutation visible to readers is an atomic ``os.replace`` of the
@@ -26,12 +26,16 @@ Layout::
       quarantine/epoch=<k>/        # late/low-LSN events (appended per epoch)
       metrics/                     # per-epoch lineage + apply metrics
 
-The table is hash-bucketed by ``conv_id`` (``pmod(xxhash64(conv_id), N)``)
-— the Iceberg ``bucket(N, conv_id)`` transform — so a MERGE touches and
-rewrites only the buckets its batch hits (partition-pruned rewrite), and
-at cluster scale the merge join is a co-partitioned storage-partitioned
-join. The call-site API (``merge`` in merge.py) mirrors Iceberg so a real
-Iceberg backend can replace icelite without touching the engine.
+The table is hash-bucketed by ``conv_id`` (``pmod(hash(conv_id), N)``)
+— the Iceberg ``bucket(N, conv_id)`` transform. Writes are merge-on-read:
+each epoch appends per-bucket delta files (``commit_deltas``), reads
+resolve max-``__lsn`` per key over base ∪ deltas, and ``compact`` folds a
+bucket's deltas back into its base — rewriting only the buckets that have
+deltas. Every commit is one manifest that carries its parent forward
+(``_commit_next``), so the manifest layout lives in one place
+(``_manifest``). The call-site API (``apply_delta_epoch`` in merge.py)
+mirrors Iceberg so a real Iceberg backend can replace icelite without
+touching the engine.
 
 Reference analog: the reference's final combined table is fully rebuilt
 per edition and diffed across runs
@@ -55,6 +59,7 @@ CURRENT = "CURRENT"
 #: every snapshot so a table created under a different bucketing scheme
 #: refuses loudly instead of silently mis-assigning rows to buckets
 BUCKET_FN = "murmur3_pmod_v1"
+DEFAULT_KEY_COLS = ["conv_id", "turn_idx"]
 
 
 class CommitConflict(RuntimeError):
@@ -147,6 +152,47 @@ class LocalManifestIO:
         os.remove(os.path.join(self.snap_dir, name))
 
 
+def _manifest(m: dict) -> dict:
+    """The snapshot manifest layout — key order, key types, and the two
+    sections omitted when empty — for table creation and every commit."""
+    snap = {
+        "version": m["version"],
+        "schema": m["schema"],
+        "key_cols": list(m.get("key_cols", DEFAULT_KEY_COLS)),
+        "bucket_fn": BUCKET_FN,
+        "n_buckets": int(m.get("n_buckets", 32)),
+        "files": {str(k): v for k, v in m["files"].items()},
+        # merge-on-read delta files per bucket, in commit order;
+        # resolution is max-__lsn per key so order is informational
+        "deltas": {str(k): v for k, v in m.get("deltas", {}).items()},
+        "committed_epochs": sorted(m["committed_epochs"]),
+        # partial-epoch slice markers (streaming): idempotence unit
+        # when one epoch's files span micro-batches
+        "slices": sorted(m.get("slices", [])),
+        # cumulative applied source files per still-incomplete epoch
+        # (streaming): union across slices; compared to the
+        # producer's _DONE declaration to decide epoch completeness
+        "epoch_files": {str(k): sorted(v) for k, v in m.get("epoch_files", {}).items()},
+        "parent": m["parent"],
+        "stats": m["stats"],
+    }
+    if m.get("rebucket_progress") is not None:
+        # in-flight bucket-count evolution bookkeeping (see rebucket):
+        # per-old-bucket-group rewrite results + the base each group
+        # read, so a crashed/conflicted rebucket resumes instead of
+        # restarting O(table)
+        snap["rebucket_progress"] = m["rebucket_progress"]
+    if m.get("aux"):
+        # engine-maintained auxiliary artifacts (e.g. the LSH band
+        # index, band_index.py): name -> {"files": [relpaths], ...}.
+        # Committed in the SAME atomic pointer swap as the data, so
+        # an index can never reference rows the table doesn't hold
+        # (or miss rows it does). Append-only across commits; every
+        # commit carries it forward from its parent.
+        snap["aux"] = m["aux"]
+    return snap
+
+
 def bucket_expr(n_buckets: int, col: str = "conv_id"):
     """Deterministic bucket id: pmod(hash(conv_id), N) — Iceberg's bucket
     transform shape, using Spark's Murmur3 ``hash`` so the bucket function
@@ -196,18 +242,21 @@ class IceliteTable:
             shutil.rmtree(root)
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        t = cls(root, io=io)
-        t._key_cols = list(key_cols or ["conv_id", "turn_idx"])
-        t._write_snapshot(
-            version=0,
-            schema=payload_schema,
-            files={},
-            committed_epochs=[],
-            parent=None,
-            stats={},
-            n_buckets=n_buckets,
+        io.commit_atomic(
+            "snapshot-000000.json",
+            _manifest({
+                "version": 0,
+                "schema": payload_schema.jsonValue(),
+                "key_cols": key_cols or DEFAULT_KEY_COLS,
+                "n_buckets": n_buckets,
+                "files": {},
+                "committed_epochs": [],
+                "parent": None,
+                "stats": {},
+            }),
+            None,
         )
-        return t
+        return cls(root, io=io)
 
     def exists(self) -> bool:
         return self.io.read_current() is not None
@@ -232,14 +281,17 @@ class IceliteTable:
             if n.startswith("snapshot-") and n.endswith(".json")
         )
 
-    def schema(self) -> T.StructType:
-        return T.StructType.fromJson(self.snapshot()["schema"])
+    # ``snap``: read from a manifest the caller already holds instead of
+    # re-reading the live one
 
-    def n_buckets(self) -> int:
-        return int(self.snapshot().get("n_buckets", 32))
+    def schema(self, snap: dict | None = None) -> T.StructType:
+        return T.StructType.fromJson((snap or self.snapshot())["schema"])
 
-    def key_cols(self) -> list[str]:
-        return list(self.snapshot().get("key_cols", ["conv_id", "turn_idx"]))
+    def n_buckets(self, snap: dict | None = None) -> int:
+        return int((snap or self.snapshot()).get("n_buckets", 32))
+
+    def key_cols(self, snap: dict | None = None) -> list[str]:
+        return list((snap or self.snapshot()).get("key_cols", DEFAULT_KEY_COLS))
 
     def deltas(self) -> dict[str, list[str]]:
         return self.snapshot().get("deltas", {})
@@ -268,63 +320,20 @@ class IceliteTable:
         eps = self.snapshot()["committed_epochs"]
         return max(eps) if eps else None
 
-    def _write_snapshot(
-        self,
-        version,
-        schema,
-        files,
-        committed_epochs,
-        parent,
-        stats,
-        n_buckets=None,
-        deltas=None,
-        slices=None,
-        epoch_files=None,
-        expected_current=None,
-        rebucket_progress=None,
-        aux=None,
-    ):
-        snap = {
-            "version": version,
-            "schema": schema.jsonValue(),
-            "key_cols": getattr(self, "_key_cols", None) or self.key_cols(),
-            "bucket_fn": BUCKET_FN,
-            "n_buckets": n_buckets if n_buckets is not None else self.n_buckets(),
-            "files": {str(k): v for k, v in files.items()},
-            # merge-on-read delta files per bucket, in commit order;
-            # resolution is max-__lsn per key so order is informational
-            "deltas": {str(k): v for k, v in (deltas or {}).items()},
-            "committed_epochs": sorted(committed_epochs),
-            # partial-epoch slice markers (streaming): idempotence unit
-            # when one epoch's files span micro-batches
-            "slices": sorted(slices or []),
-            # cumulative applied source files per still-incomplete epoch
-            # (streaming): union across slices; compared to the
-            # producer's _DONE declaration to decide epoch completeness
-            "epoch_files": {str(k): sorted(v) for k, v in (epoch_files or {}).items()},
-            "parent": parent,
-            "stats": stats,
-        }
-        if rebucket_progress is not None:
-            # in-flight bucket-count evolution bookkeeping (see rebucket):
-            # per-old-bucket-group rewrite results + the base each group
-            # read, so a crashed/conflicted rebucket resumes instead of
-            # restarting O(table)
-            snap["rebucket_progress"] = rebucket_progress
-        if aux:
-            # engine-maintained auxiliary artifacts (e.g. the LSH band
-            # index, band_index.py): name -> {"files": [relpaths], ...}.
-            # Committed in the SAME atomic pointer swap as the data, so
-            # an index can never reference rows the table doesn't hold
-            # (or miss rows it does). Append-only across commits; every
-            # snapshot-writing path carries it forward.
-            snap["aux"] = aux
-        name = f"snapshot-{version:06d}.json"
-        # the atomic commit point: data + schema + epoch marker become
-        # visible in one conditional pointer swap (see LocalManifestIO
-        # for what this becomes on an object store); raises
-        # CommitConflict if a concurrent writer moved CURRENT
-        self.io.commit_atomic(name, snap, expected_current)
+    def _commit_next(self, snap: dict, stats: dict, **changes) -> dict:
+        """Commit the snapshot that follows ``snap``: a copy of it with
+        ``version``/``parent`` advanced, the new ``stats`` and only the
+        fields the caller ``changes`` — every other section (including
+        ``aux`` and ``rebucket_progress``) carries forward. The atomic
+        commit point: data + schema + epoch marker become visible in one
+        conditional pointer swap against ``snap``'s own manifest (see
+        LocalManifestIO for what this becomes on an object store); raises
+        CommitConflict if a concurrent writer moved CURRENT since
+        ``snap`` was read. Returns the committed manifest."""
+        v = snap["version"]
+        nxt = _manifest({**snap, **changes, "version": v + 1, "parent": v, "stats": stats})
+        self.io.commit_atomic(f"snapshot-{v + 1:06d}.json", nxt, f"snapshot-{v:06d}.json")
+        return nxt
 
     # --- read path -----------------------------------------------------------
 
@@ -382,7 +391,7 @@ class IceliteTable:
             return df  # pure base: unique per key already
         from .operators.dedup import reduce_latest
 
-        return reduce_latest(df, key_cols=self.key_cols(), order_col="__lsn")
+        return reduce_latest(df, key_cols=self.key_cols(snap), order_col="__lsn")
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The table's visible (non-tombstone) rows, payload columns —
@@ -438,9 +447,10 @@ class IceliteTable:
 
     @staticmethod
     def _already_committed(snap: dict, epoch: int, slice_marker: str | None) -> bool:
-        """Idempotence predicate shared by both commit paths. Whole-epoch
-        commits dedupe on the epoch id; slice commits (streaming micro-
-        batches carrying part of an epoch) dedupe on their own marker —
+        """Idempotence predicate shared by the apply skip check and the
+        delta commit. Whole-epoch commits dedupe on the epoch id; slice
+        commits (streaming micro-batches carrying part of an epoch)
+        dedupe on their own marker —
         and ALSO on the epoch id: an epoch enters ``committed_epochs``
         only when the applied-file union covers the producer's declared
         ``_DONE`` set, so every possible slice of a committed epoch is
@@ -461,13 +471,12 @@ class IceliteTable:
     def _union_with_current(snap: dict, schema: T.StructType) -> T.StructType:
         """Widen the committing writer's schema with whatever the LIVE
         snapshot carries. A concurrent commit may have evolved the table
-        schema while this writer's batch was in flight; for COW commits
-        that touched disjoint buckets (base validation passes) and for
-        all MOR delta commits (no base validation), blindly writing the
-        writer's own evolved schema would shrink the manifest schema and
-        hide the concurrently added column from reads — old files
-        project missing columns as null against the manifest schema, so
-        the union is always safe (additive evolution only)."""
+        schema while this writer's batch was in flight; delta commits
+        carry no base validation, so blindly writing the writer's own
+        evolved schema would shrink the manifest schema and hide the
+        concurrently added column from reads — old files project missing
+        columns as null against the manifest schema, so the union is
+        always safe (additive evolution only)."""
         from .operators.evolve import merge_schemas
 
         return merge_schemas(T.StructType.fromJson(snap["schema"]), schema)
@@ -483,117 +492,18 @@ class IceliteTable:
             snap = self.snapshot()
             if epoch in set(snap["committed_epochs"]):
                 return snap
-            efiles = {k: list(v) for k, v in snap.get("epoch_files", {}).items()}
+            efiles = dict(snap.get("epoch_files", {}))
             efiles.pop(str(epoch), None)
             try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=T.StructType.fromJson(snap["schema"]),
-                    files={int(k): v for k, v in snap["files"].items()},
+                return self._commit_next(
+                    snap,
+                    {"epoch_marker_promoted": epoch},
                     committed_epochs=set(snap["committed_epochs"]) | {epoch},
-                    parent=snap["version"],
-                    stats={"epoch_marker_promoted": epoch},
-                    deltas={int(k): v for k, v in snap.get("deltas", {}).items()},
-                    slices=snap.get("slices", []),
                     epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=snap.get("aux"),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
                 )
             except CommitConflict:
                 continue
-            return self.snapshot()
         raise CommitConflict(f"epoch {epoch}: marker promotion lost 8 CAS races")
-
-    def commit(
-        self,
-        epoch: int,
-        new_bucket_files: dict[int, list[str]],
-        affected: set[int],
-        schema: T.StructType,
-        stats: dict,
-        slice_marker: str | None = None,
-        mark_epoch: bool = True,
-        base_snapshot: dict | None = None,
-        slice_files: list[str] | None = None,
-        aux_add: dict | None = None,
-        expected_n_buckets: int | None = None,
-    ) -> dict:
-        """Copy-on-write commit: swap in the new files for affected
-        buckets (absorbing any deltas they had), carry over the rest,
-        mark the epoch committed — atomically. Optimistic under
-        concurrency: a losing CAS re-reads and re-applies the metadata
-        mutation (the data files are already on disk and unreferenced
-        until this succeeds).
-
-        ``base_snapshot`` is the snapshot the rewrite was COMPUTED from.
-        A COW rewrite is only valid against the exact base it read: if a
-        concurrent commit touched an affected bucket (new delta files or
-        a base rewrite) after that read, blindly swapping in our files
-        would discard the concurrent writer's rows while the epoch
-        marker suppresses redelivery — a silent lost update (the Iceberg
-        analog is validateDataFilesExist/validateNoConflictingData on
-        SERIALIZABLE merges). So every attempt — including the first,
-        since CURRENT may move between the merge read and this call —
-        re-validates the affected buckets against the base and raises
-        :class:`CommitConflict` to the CALLER (who must re-read,
-        re-merge, re-write) instead of retrying internally."""
-        for _attempt in range(8):
-            snap = self.snapshot()
-            if self._already_committed(snap, epoch, slice_marker):
-                return snap  # already committed (raced redelivery) — no-op
-            if (
-                expected_n_buckets is not None
-                and int(snap.get("n_buckets", 32)) != expected_n_buckets
-            ):
-                raise CommitConflict(
-                    f"epoch {epoch}: bucket count changed "
-                    f"({expected_n_buckets} → {snap.get('n_buckets')}) since "
-                    "the rewrite was computed — re-read and re-merge"
-                )
-            if base_snapshot is not None and snap["version"] != base_snapshot["version"]:
-                for b in affected:
-                    bs = str(b)
-                    if snap["files"].get(bs, []) != base_snapshot["files"].get(bs, []) or snap.get(
-                        "deltas", {}
-                    ).get(bs, []) != base_snapshot.get("deltas", {}).get(bs, []):
-                        raise CommitConflict(
-                            f"epoch {epoch}: bucket {b} changed since base "
-                            f"v{base_snapshot['version']} (now v{snap['version']}) — "
-                            "rewrite is stale; re-read and re-merge"
-                        )
-            files = {int(k): v for k, v in snap["files"].items()}
-            deltas = {int(k): v for k, v in snap.get("deltas", {}).items()}
-            for b in affected:
-                files[b] = new_bucket_files.get(b, [])
-                deltas.pop(b, None)  # rewritten base subsumes prior deltas
-            version = snap["version"] + 1
-            epochs = set(snap["committed_epochs"])
-            if mark_epoch:
-                epochs |= {epoch}
-            slices = set(snap.get("slices", []))
-            if slice_marker is not None:
-                slices |= {slice_marker}
-            efiles = self._union_epoch_files(snap, epoch, slice_files, mark_epoch)
-            try:
-                self._write_snapshot(
-                    version=version,
-                    schema=self._union_with_current(snap, schema),
-                    files=files,
-                    committed_epochs=epochs,
-                    parent=snap["version"],
-                    stats=stats,
-                    deltas=deltas,
-                    slices=slices,
-                    epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=self._merged_aux(snap, aux_add),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
-                )
-            except CommitConflict:
-                continue
-            return self.snapshot()
-        raise CommitConflict(f"epoch {epoch}: commit lost 8 CAS races")
 
     @staticmethod
     def _union_epoch_files(
@@ -656,8 +566,11 @@ class IceliteTable:
         expected_n_buckets: int | None = None,
     ) -> dict:
         """Merge-on-read commit: append the epoch's delta files to each
-        touched bucket; nothing is rewritten. Apply cost is O(batch).
-        Optimistic under concurrency (see :meth:`commit`).
+        touched bucket and mark the epoch committed — atomically; nothing
+        is rewritten, so apply cost is O(batch). Optimistic under
+        concurrency: a losing CAS re-reads and re-applies the metadata
+        mutation (the data files are already on disk and unreferenced
+        until this succeeds).
 
         ``expected_n_buckets``: the bucket count the delta files were
         WRITTEN under. A concurrent rebucket changes the bucket function,
@@ -679,34 +592,30 @@ class IceliteTable:
                     f"({expected_n_buckets} → {snap.get('n_buckets')}) since "
                     "the delta files were written — re-bucket and re-write"
                 )
-            deltas = {int(k): list(v) for k, v in snap.get("deltas", {}).items()}
+            deltas = {k: list(v) for k, v in snap.get("deltas", {}).items()}
             for b, fl in new_bucket_files.items():
-                deltas.setdefault(b, []).extend(fl)
+                deltas.setdefault(str(b), []).extend(fl)
             epochs = set(snap["committed_epochs"])
             if mark_epoch:
                 epochs |= {epoch}
             slices = set(snap.get("slices", []))
             if slice_marker is not None:
                 slices |= {slice_marker}
-            efiles = self._union_epoch_files(snap, epoch, slice_files, mark_epoch)
             try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=self._union_with_current(snap, schema),
-                    files={int(k): v for k, v in snap["files"].items()},
-                    committed_epochs=epochs,
-                    parent=snap["version"],
-                    stats=stats,
+                return self._commit_next(
+                    snap,
+                    stats,
+                    schema=self._union_with_current(snap, schema).jsonValue(),
                     deltas=deltas,
+                    committed_epochs=epochs,
                     slices=slices,
-                    epoch_files=efiles,
-                    rebucket_progress=snap.get("rebucket_progress"),
+                    epoch_files=self._union_epoch_files(
+                        snap, epoch, slice_files, mark_epoch
+                    ),
                     aux=self._merged_aux(snap, aux_add),
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
                 )
             except CommitConflict:
                 continue
-            return self.snapshot()
         raise CommitConflict(f"epoch {epoch}: delta commit lost 8 CAS races")
 
     # --- maintenance ---------------------------------------------------------
@@ -739,23 +648,9 @@ class IceliteTable:
                 )
             aux[name] = {**aux.get(name, {}), "files": sorted(files), **(extra or {})}
             try:
-                self._write_snapshot(
-                    version=snap["version"] + 1,
-                    schema=T.StructType.fromJson(snap["schema"]),
-                    files={int(k): v for k, v in snap["files"].items()},
-                    committed_epochs=set(snap["committed_epochs"]),
-                    parent=snap["version"],
-                    stats={"aux_rewrite": name},
-                    deltas={int(k): v for k, v in snap.get("deltas", {}).items()},
-                    slices=snap.get("slices", []),
-                    epoch_files=snap.get("epoch_files", {}),
-                    rebucket_progress=snap.get("rebucket_progress"),
-                    aux=aux,
-                    expected_current=f"snapshot-{snap['version']:06d}.json",
-                )
+                return self._commit_next(snap, {"aux_rewrite": name}, aux=aux)
             except CommitConflict:
                 continue  # CAS race on an UNRELATED commit — revalidate
-            return self.snapshot()
         raise CommitConflict(f"aux {name!r}: rewrite lost 8 CAS races")
 
     def rebucket(
@@ -806,8 +701,8 @@ class IceliteTable:
         lazy quarantine is in use, or pending stale events fold in
         unaudited (final state is identical either way)."""
         snap = self.snapshot()
-        old_n = int(snap.get("n_buckets", 32))
-        key = self.key_cols()[0]
+        old_n = self.n_buckets(snap)
+        key = self.key_cols(snap)[0]
         chunk = int(chunk_old_buckets or old_n)
         prog = snap.get("rebucket_progress")
         if prog and int(prog.get("to", -1)) != int(new_n_buckets):
@@ -852,23 +747,16 @@ class IceliteTable:
                     for b, fl in groups_done[gk]["new_files"].items():
                         files_new.setdefault(int(b), []).extend(fl)
                 try:
-                    self._write_snapshot(
-                        version=cur["version"] + 1,
-                        schema=T.StructType.fromJson(cur["schema"]),
-                        files={b: files_new.get(b, []) for b in sorted(files_new)},
-                        committed_epochs=set(cur["committed_epochs"]),
-                        parent=cur["version"],
-                        stats={"rebucket": True, "from": old_n, "to": new_n_buckets},
+                    return self._commit_next(
+                        cur,
+                        {"rebucket": True, "from": old_n, "to": new_n_buckets},
+                        files={b: files_new[b] for b in sorted(files_new)},
                         n_buckets=new_n_buckets,
                         deltas={},
-                        slices=cur.get("slices", []),
-                        epoch_files=cur.get("epoch_files", {}),
-                        aux=cur.get("aux"),
-                        expected_current=f"snapshot-{cur['version']:06d}.json",
+                        rebucket_progress=None,
                     )
                 except CommitConflict:
                     continue  # a commit raced the swap — revalidate its buckets
-                return self.snapshot()
 
             for gk, g in pending:
                 cur = self.snapshot()
@@ -898,23 +786,13 @@ class IceliteTable:
                 # revalidate; the in-memory record survives if its base
                 # still matches.
                 try:
-                    self._write_snapshot(
-                        version=version,
-                        schema=T.StructType.fromJson(cur["schema"]),
-                        files={int(k): v for k, v in cur["files"].items()},
-                        committed_epochs=set(cur["committed_epochs"]),
-                        parent=cur["version"],
-                        stats={"rebucket_progress_group": gk, "to": new_n_buckets},
-                        n_buckets=old_n,
-                        deltas={int(k): v for k, v in cur.get("deltas", {}).items()},
-                        slices=cur.get("slices", []),
-                        epoch_files=cur.get("epoch_files", {}),
+                    self._commit_next(
+                        cur,
+                        {"rebucket_progress_group": gk, "to": new_n_buckets},
                         rebucket_progress={
                             "to": int(new_n_buckets),
                             "groups": groups_done,
                         },
-                        aux=cur.get("aux"),
-                        expected_current=f"snapshot-{cur['version']:06d}.json",
                     )
                 except CommitConflict:
                     break  # concurrent commit mid-rewrite — revalidate all
@@ -1010,7 +888,8 @@ class IceliteTable:
         amortized into the compaction scan instead of a per-epoch table
         re-scan (which would make apply O(table) instead of O(batch))."""
         snap = self.snapshot()
-        n = snap.get("n_buckets", 32)
+        n = self.n_buckets(snap)
+        keys = self.key_cols(snap)
         had_deltas = any(snap.get("deltas", {}).values())
         if buckets is None:
             buckets = {int(b) for b, v in snap.get("deltas", {}).items() if v}
@@ -1020,7 +899,6 @@ class IceliteTable:
             return snap
         df = self.read_resolved(spark, buckets=buckets)
         if quarantine_dir is not None and had_deltas:
-            keys = self.key_cols()
             stored = self.read_stored(spark, buckets=buckets)
             winners = df.select(
                 *keys,
@@ -1034,7 +912,7 @@ class IceliteTable:
                     F.col("__epoch").alias("quarantine_epoch"),
                     F.col("__lsn").alias("lsn"),
                     *keys,
-                    *[f.name for f in self.schema().fields if f.name not in keys],
+                    *[f.name for f in self.schema(snap).fields if f.name not in keys],
                     F.col("__deleted").alias("was_delete"),
                     "applied_lsn",
                 )
@@ -1048,29 +926,19 @@ class IceliteTable:
             )
         if drop_tombstones:
             df = df.filter(~F.col("__deleted"))
-        df = df.withColumn(BUCKET_COL, bucket_expr(n, self.key_cols()[0]))
-        version = snap["version"] + 1
-        new_files = self.write_merged(df, epoch=-1, version=version)
-        files = {int(k): v for k, v in snap["files"].items()}
-        deltas = {int(k): v for k, v in snap.get("deltas", {}).items()}
+        df = df.withColumn(BUCKET_COL, bucket_expr(n, keys[0]))
+        new_files = self.write_merged(df, epoch=-1, version=snap["version"] + 1)
+        files = dict(snap["files"])
+        deltas = dict(snap.get("deltas", {}))
         for b in buckets:
-            files[b] = new_files.get(b, [])
-            deltas.pop(b, None)
-        self._write_snapshot(
-            version=version,
-            schema=self.schema(),
+            files[str(b)] = new_files.get(b, [])
+            deltas.pop(str(b), None)
+        # maintenance op: a CommitConflict escapes to the caller, who
+        # re-reads and re-runs (the rewritten data dir would be stale
+        # after a concurrent commit anyway)
+        return self._commit_next(
+            snap,
+            {"compaction": True, "buckets": sorted(buckets)},
             files=files,
-            committed_epochs=set(snap["committed_epochs"]),
-            parent=snap["version"],
-            stats={"compaction": True, "buckets": sorted(buckets)},
             deltas=deltas,
-            slices=snap.get("slices", []),
-            epoch_files=snap.get("epoch_files", {}),
-            rebucket_progress=snap.get("rebucket_progress"),
-            aux=snap.get("aux"),
-            # maintenance op: a CommitConflict escapes to the caller,
-            # who re-reads and re-runs (the rewritten data dir would be
-            # stale after a concurrent commit anyway)
-            expected_current=f"snapshot-{snap['version']:06d}.json",
         )
-        return self.snapshot()

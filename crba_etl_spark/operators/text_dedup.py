@@ -206,6 +206,12 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     h32/affine/modulus arithmetic, same NULL-text drop (no shingles →
     no group → no signature row, round-5 ADVICE semantics).
 
+    Precondition: ``id_col`` is unique per row. The signature is a
+    ``groupBy(id_col)``, so rows sharing an id collapse into ONE
+    signature — the min over the union of their texts' shingles —
+    where the earlier row-local form emitted one row per input row.
+    Deduplicate ids upstream (e.g. latest-per-key) before calling.
+
     ``spread_compute``: parallelism of the signature pass must not be
     bound by the source file layout (a single-row-group parquet file =
     one scan task); the narrow (id, text) projection is repartitioned to

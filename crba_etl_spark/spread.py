@@ -33,7 +33,13 @@ def spread_compute(df: DataFrame, min_parallelism: int | None = None) -> DataFra
     """Repartition ``df`` to the session's default parallelism iff it
     currently has fewer partitions than that; no-op otherwise (and on
     anything whose partitioning cannot be inspected, e.g. streaming
-    relations)."""
+    relations).
+
+    Wrap only scan-level projections (scan → filter/select, no
+    exchange). Reading ``df.rdd`` forces the final physical plan; with
+    AQE on, a plan that contains a shuffle materializes its upstream
+    stages there, and the separately planned ``repartition`` returned
+    here does not reuse that output — the upstream runs twice."""
     spark = df.sparkSession
     p = min_parallelism or spark.sparkContext.defaultParallelism
     try:

@@ -76,7 +76,7 @@ def main() -> None:
             pre = host_noise_ratio()
         root = os.path.join(base, f"crba_idx_bench_{name}")
         shutil.rmtree(root, ignore_errors=True)
-        eng = CDCEngine(spark, root, n_buckets=16, mode="mor", **kw)
+        eng = CDCEngine(spark, root, n_buckets=16, **kw)
         t0 = time.monotonic()
         n = 0
         for k in epochs:

@@ -57,7 +57,7 @@ def test_aligned_apply_is_exchange_free_and_correct(spark, stream, tmpdir_):
     import uuid
 
     run_tag = uuid.uuid4().hex[:8]
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=N_BUCKETS, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=N_BUCKETS)
     made = []
     for k in list_epochs(stream):
         ev = _bucketized(spark, stream, k, run_tag)
@@ -96,7 +96,7 @@ def test_misaligned_input_still_correct(spark, stream, tmpdir_):
     cost extra files per bucket but can never produce wrong rows —
     Catalyst inserts the reduce's missing exchange and the write
     assigns buckets by value."""
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=N_BUCKETS, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=N_BUCKETS)
     for k in list_epochs(stream):
         ev = spark.read.parquet(os.path.join(stream, f"epoch={k}"))  # plain
         eng.apply_epoch(ev, k, source_aligned=True)

@@ -153,7 +153,7 @@ def test_streaming_tail_maintains_index_exactly_once(spark, tmpdir_):
         sdir, StreamSpec(seed=11, n_events=3000, n_epochs=3, evolve_epoch=None)
     )
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor", lsh_index=True
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8, lsh_index=True
     )
     q = stream_apply(
         spark,
@@ -202,7 +202,7 @@ def test_engine_dedup_labels_incremental_state(spark, tmpdir_):
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     t2 = "kilo lima mike november oscar papa quebec romeo sierra tango"
     root = os.path.join(tmpdir_, "tbl")
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor", dedup_labels=True)
+    eng = CDCEngine(spark, root, n_buckets=8, dedup_labels=True)
     e0 = make_events(
         spark,
         [
@@ -283,7 +283,7 @@ def test_streaming_dedup_labels_slicewise(spark, tmpdir_):
         sdir, StreamSpec(seed=13, n_events=2000, n_epochs=2, evolve_epoch=None)
     )
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         dedup_labels=True, dedup_max_bucket=None,
     )
     q = stream_apply(
@@ -330,7 +330,7 @@ def test_index_rebuild_drops_stale_rows(spark, tmpdir_):
 
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     root = os.path.join(tmpdir_, "tbl")
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor", lsh_index=True)
+    eng = CDCEngine(spark, root, n_buckets=8, lsh_index=True)
     eng.apply_epoch(
         make_events(spark, [(1, 0, "I", "a", 0, "user", t1, None, 0, 0)]), 0
     )
@@ -370,7 +370,7 @@ def test_labels_compact_preserves_resolution(spark, tmpdir_):
 
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     root = os.path.join(tmpdir_, "tbl")
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor", dedup_labels=True)
+    eng = CDCEngine(spark, root, n_buckets=8, dedup_labels=True)
     eng.apply_epoch(
         make_events(
             spark,
@@ -401,7 +401,7 @@ def test_engine_maintains_index_across_epochs(spark, tmpdir_):
     one (here the probe matches the updated text, exercising exactly
     that)."""
     root = os.path.join(tmpdir_, "tbl")
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor", lsh_index=True)
+    eng = CDCEngine(spark, root, n_buckets=8, lsh_index=True)
     base = "the quick brown fox jumps over the lazy dog again and again"
     e0 = make_events(
         spark,

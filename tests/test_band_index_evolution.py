@@ -42,7 +42,7 @@ def test_index_maintained_across_schema_evolution(spark, tmpdir_):
     candidates from the persisted index must cover a fresh recompute
     over the final (evolved) table, and every live doc must be labeled."""
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         dedup_labels=True,
     )
     e0 = make_events(
@@ -86,7 +86,7 @@ def test_rebucket_between_index_write_and_commit(spark, tmpdir_):
     bucketing, (2) bucket-pruned reads correct, (3) index candidates
     equal to a fresh recompute over final text."""
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         lsh_index=True,
     )
     eng.apply_epoch(
@@ -161,7 +161,7 @@ def test_rebucket_between_label_fold_and_commit(spark, tmpdir_):
     from crba_etl_spark.operators.graph import connected_components_star
 
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         dedup_labels=True,
     )
     eng.apply_epoch(

@@ -12,7 +12,8 @@ import pytest
 from conftest import make_events
 from crba_etl_spark.engine import CDCEngine
 
-MODES = ["mor", "cow"]
+# the one apply path (merge-on-read); the parameter keeps the [mor] ids
+MODES = ["mor"]
 
 
 def rows_of(df):
@@ -23,7 +24,7 @@ def rows_of(df):
 
 @pytest.mark.parametrize("mode", MODES)
 def test_insert_then_update(spark, tmpdir_, mode):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     e0 = make_events(spark, [
         (1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
         (2, 0, "I", "c1", 1, "assistant", "hi", None, 60, 1),
@@ -42,7 +43,7 @@ def test_insert_then_update(spark, tmpdir_, mode):
 
 @pytest.mark.parametrize("mode", MODES)
 def test_upsert_creates_and_updates(spark, tmpdir_, mode):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     eng.apply_epoch(make_events(spark, [
         (1, 0, "UPSERT", "c1", 0, "user", "v1", None, 0, 0),
     ]), 0)
@@ -58,7 +59,7 @@ def test_upsert_creates_and_updates(spark, tmpdir_, mode):
 def test_delete_tombstone_blocks_resurrection(spark, tmpdir_, mode):
     """A late, lower-LSN update must NOT resurrect a deleted key."""
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode, quarantine="eager"
+        spark, os.path.join(tmpdir_, "t"), n_buckets=4, quarantine="eager"
     )
     eng.apply_epoch(make_events(spark, [
         (1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
@@ -83,7 +84,7 @@ def test_delete_tombstone_blocks_resurrection(spark, tmpdir_, mode):
 def test_delete_for_absent_key_inserts_tombstone(spark, tmpdir_, mode):
     """D for a key never seen: the tombstone must still guard against a
     straggling lower-LSN insert arriving later."""
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     eng.apply_epoch(make_events(spark, [
         (7, 0, "D", "cx", 3, None, None, None, None, 0),
     ]), 0)
@@ -98,7 +99,7 @@ def test_delete_for_absent_key_inserts_tombstone(spark, tmpdir_, mode):
 def test_duplicate_lsn_dedup(spark, tmpdir_, mode):
     """~2% duplicate-LSN redeliveries: same logical change twice in one
     batch and again across epochs — applied exactly once."""
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     st = eng.apply_epoch(make_events(spark, [
         (1, 0, "I", "c1", 0, "user", "once", None, 0, 0),
         (1, 0, "I", "c1", 0, "user", "once", None, 0, 1),  # dup in batch
@@ -114,7 +115,7 @@ def test_duplicate_lsn_dedup(spark, tmpdir_, mode):
 @pytest.mark.parametrize("mode", MODES)
 def test_out_of_order_within_batch(spark, tmpdir_, mode):
     """Within one epoch, LSN order decides the winner regardless of arrival."""
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     eng.apply_epoch(make_events(spark, [
         (5, 0, "U", "c1", 0, "user", "newest", None, 0, 0),  # arrives first
         (1, 0, "I", "c1", 0, "user", "oldest", None, 0, 1),
@@ -125,7 +126,7 @@ def test_out_of_order_within_batch(spark, tmpdir_, mode):
 
 @pytest.mark.parametrize("mode", MODES)
 def test_exactly_once_epoch_redelivery(spark, tmpdir_, mode):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     ev = make_events(spark, [(1, 0, "I", "c1", 0, "user", "x", None, 0, 0)])
     s1 = eng.apply_epoch(ev, 0)
     s2 = eng.apply_epoch(ev, 0)

@@ -22,14 +22,14 @@ def stream(tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 @pytest.mark.parametrize("kill_after", [0, 2])
 def test_restart_between_epochs(spark, stream, tmpdir_, mode, kill_after):
     root = os.path.join(tmpdir_, f"{mode}{kill_after}")
-    e1 = CDCEngine(spark, root, n_buckets=8, mode=mode)
+    e1 = CDCEngine(spark, root, n_buckets=8)
     e1.replay(stream, epochs=list(range(kill_after + 1)))
     del e1  # "crash": nothing survives but disk
-    e2 = CDCEngine(spark, root, n_buckets=8, mode=mode)
+    e2 = CDCEngine(spark, root, n_buckets=8)
     assert resume_point(root, stream) == list(range(kill_after + 1, 5))
     resume(e2, stream)
     got = (
@@ -43,7 +43,7 @@ def test_crash_between_write_and_rename(spark, stream, tmpdir_):
     """Data files written but CURRENT not swapped: readers see the old
     snapshot; recovery rewrites the orphan dir and converges."""
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, root, n_buckets=8)
     eng.replay(stream, epochs=[0, 1])
     snap_before = eng.table.snapshot()
 
@@ -59,7 +59,7 @@ def test_crash_between_write_and_rename(spark, stream, tmpdir_):
     assert eng.table.snapshot() == snap_before
     assert 2 not in eng.table.committed_epochs()
 
-    e2 = CDCEngine(spark, root, n_buckets=8, mode="mor")
+    e2 = CDCEngine(spark, root, n_buckets=8)
     resume(e2, stream)
     got = (
         e2.read_final().orderBy("conv_id", "turn_idx", "ts").toPandas().reset_index(drop=True)

@@ -199,7 +199,7 @@ def test_check_html_report_renders(spark, stream, tmpdir_):
     )
 
     table = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, table, n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, table, n_buckets=4)
     eng.replay(stream)
 
     # CLI path: subprocess renders the file

@@ -1,4 +1,4 @@
-"""Compaction triggers (count-based, size-tiered, cadence), mid-replay
+"""Compaction triggers (count-based, size-tiered), mid-replay
 compaction across the schema-evolution boundary (a real divergence found
 in round 2: duplicate-LSN redeliveries that straddled the boundary used
 to carry a DIFFERENT payload than their original, breaking every max-LSN
@@ -24,7 +24,7 @@ def _epoch(spark, k, text):
 
 def test_size_tiered_compaction_triggers(spark, tmpdir_):
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=2, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=2,
         max_delta_bytes_per_bucket=1,  # any delta byte trips it
     )
     eng.apply_epoch(_epoch(spark, 0, "x" * 100), 0)
@@ -35,7 +35,7 @@ def test_size_tiered_compaction_triggers(spark, tmpdir_):
 
 def test_count_trigger_untouched_below_thresholds(spark, tmpdir_):
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=2, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=2,
         max_deltas_per_bucket=100, max_delta_bytes_per_bucket=10**12,
     )
     eng.apply_epoch(_epoch(spark, 0, "x"), 0)
@@ -44,14 +44,14 @@ def test_count_trigger_untouched_below_thresholds(spark, tmpdir_):
 
 
 def test_mid_replay_compaction_across_evolution_matches_oracle(spark, tmpdir_):
-    """compact_every=1 forces a compaction between EVERY epoch, including
+    """max_deltas_per_bucket=1 forces a compaction after EVERY epoch, including
     straddling the evolution boundary — final state must still equal the
     independent DuckDB replay (regression: seed 19 diverged before the
     generator redelivery fix)."""
     d = os.path.join(tmpdir_, "s")
     generate_stream(d, StreamSpec(seed=19, n_events=6000, n_epochs=4, evolve_epoch=2))
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor", compact_every=1
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8, max_deltas_per_bucket=1
     )
     eng.replay(d)
     got = (

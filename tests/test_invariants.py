@@ -20,7 +20,7 @@ def applied(tmp_path_factory, spark):
     d = str(tmp_path_factory.mktemp("stream"))
     generate_stream(d, StreamSpec(seed=42, n_events=8000, n_epochs=4, evolve_epoch=2))
     root = str(tmp_path_factory.mktemp("table"))
-    eng = CDCEngine(spark, root, n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, root, n_buckets=8)
     eng.replay(d)
     return d, eng
 

@@ -30,7 +30,7 @@ def _apply_stale_scenario(spark, eng):
 
 def test_lazy_quarantine_extracted_at_compaction(spark, tmpdir_):
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=4, mode="mor", quarantine="lazy")
+    eng = CDCEngine(spark, root, n_buckets=4, quarantine="lazy")
     _apply_stale_scenario(spark, eng)
     # nothing audited yet (lazy) ...
     qdir = os.path.join(root, "quarantine")
@@ -47,8 +47,8 @@ def test_lazy_quarantine_extracted_at_compaction(spark, tmpdir_):
 def test_lazy_matches_eager_set(spark, tmpdir_):
     r1 = os.path.join(tmpdir_, "lazy")
     r2 = os.path.join(tmpdir_, "eager")
-    lazy = CDCEngine(spark, r1, n_buckets=4, mode="mor", quarantine="lazy")
-    eager = CDCEngine(spark, r2, n_buckets=4, mode="mor", quarantine="eager")
+    lazy = CDCEngine(spark, r1, n_buckets=4, quarantine="lazy")
+    eager = CDCEngine(spark, r2, n_buckets=4, quarantine="eager")
     _apply_stale_scenario(spark, lazy)
     _apply_stale_scenario(spark, eager)
     lazy.compact()

@@ -1,6 +1,6 @@
 """The manifest-I/O seam really is the only storage coupling: run the
-full table protocol (create → MOR deltas → COW merge → compact → time
-travel → redelivery skip → CAS conflict) against a NON-POSIX manifest
+full table protocol (create → delta commits → compact → time travel →
+redelivery skip → CAS conflict) against a NON-POSIX manifest
 backend — an in-memory key-value store with conditional-put commit
 semantics, i.e. the contract an S3/GCS/catalog deployment implements
 (If-Match PUT of the pointer). Data files still flow through Spark's
@@ -74,18 +74,18 @@ def test_full_protocol_on_kv_manifest_backend(spark, tmpdir_):
     assert io.read_current() == "snapshot-000000.json"
 
     from crba_etl_spark.operators.dedup import reduce_batch
-    from crba_etl_spark.operators.merge import apply_delta_epoch, merge_epoch
+    from crba_etl_spark.operators.merge import apply_delta_epoch
 
-    def apply(epoch, rows, cow=False):
-        reduced = reduce_batch(make_events(spark, rows))
-        fn = merge_epoch if cow else apply_delta_epoch
-        return fn(spark, table, reduced, epoch)
+    def apply(epoch, rows):
+        return apply_delta_epoch(
+            spark, table, reduce_batch(make_events(spark, rows)), epoch
+        )
 
     apply(0, [
         (1, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
         (2, 0, "I", "c2", 0, "user", "hi", None, 0, 1),
     ])
-    apply(1, [(3, 1, "U", "c1", 0, "user", "hello v2", None, 0, 2)], cow=True)
+    apply(1, [(3, 1, "U", "c1", 0, "user", "hello v2", None, 0, 2)])
     apply(2, [(4, 2, "D", "c2", 0, None, None, None, 0, 3)])
 
     got = {(r.conv_id, r.turn_idx): r.text for r in table.read(spark).collect()}
@@ -93,7 +93,7 @@ def test_full_protocol_on_kv_manifest_backend(spark, tmpdir_):
     assert table.committed_epochs() == {0, 1, 2}
 
     # redelivery of a committed epoch is a no-op through the KV markers
-    st = apply(1, [(3, 1, "U", "c1", 0, "user", "hello v2", None, 0, 2)], cow=True)
+    st = apply(1, [(3, 1, "U", "c1", 0, "user", "hello v2", None, 0, 2)])
     assert st["skipped"]
 
     # compaction + time travel work over KV manifests

@@ -69,7 +69,7 @@ def test_engine_matches_python_model(spark, tmp_path_factory, changes, n_epochs,
     ]
 
     root = str(tmp_path_factory.mktemp("prop"))
-    eng = CDCEngine(spark, os.path.join(root, "t"), n_buckets=2, mode="mor")
+    eng = CDCEngine(spark, os.path.join(root, "t"), n_buckets=2)
     for k in range(n_epochs):
         batch = [r for r in epoched if r[1] == k]
         if batch:

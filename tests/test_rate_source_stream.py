@@ -37,7 +37,7 @@ def _as_events(df):
 def test_rate_source_stream_matches_batch_apply(spark, tmpdir_):
     eng = CDCEngine(
         spark, os.path.join(tmpdir_, "t"), payload_schema=TRANSCRIPT,
-        n_buckets=4, mode="mor",
+        n_buckets=4,
     )
 
     def apply_batch(batch, batch_id):
@@ -96,7 +96,7 @@ def test_rate_source_stream_matches_batch_apply(spark, tmpdir_):
     # semantics through a real streaming source's offsets/triggers)
     oracle_eng = CDCEngine(
         spark, os.path.join(tmpdir_, "oracle_t"), payload_schema=TRANSCRIPT,
-        n_buckets=4, mode="mor",
+        n_buckets=4,
     )
     lsns = spark.createDataFrame([(x,) for x in applied], "value long")
     oracle_eng.apply_epoch(_as_events(lsns), 0)

@@ -21,7 +21,7 @@ def test_rebucket_preserves_state_and_serves_new_applies(spark, tmpdir_):
     generate_stream(
         stream, StreamSpec(seed=13, n_events=4000, n_epochs=4, evolve_epoch=2)
     )
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     eng.replay(stream, epochs=[0, 1])
     assert eng.table.deltas()  # MOR deltas exist pre-rebucket
 
@@ -44,7 +44,7 @@ def test_rebucket_preserves_state_and_serves_new_applies(spark, tmpdir_):
         assert expect <= in_bucket
 
     # epochs 2-3 (schema evolution included) apply against the new count
-    eng2 = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=16, mode="mor")
+    eng2 = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=16)
     eng2.replay(stream)
     got = (
         eng2.read_final().orderBy("conv_id", "turn_idx", "ts")
@@ -66,7 +66,7 @@ def test_rebucket_kill_and_resume(spark, tmpdir_):
     generate_stream(
         stream, StreamSpec(seed=17, n_events=4000, n_epochs=4, evolve_epoch=None)
     )
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     eng.replay(stream, epochs=[0, 1, 2])
     t = eng.table
     before = (
@@ -129,7 +129,7 @@ def test_rebucket_kill_and_resume(spark, tmpdir_):
     assert set(snap2["committed_epochs"]) == {0, 1, 2}
 
     # epoch 3 applies against the new count; final state == oracle
-    eng2 = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=32, mode="mor")
+    eng2 = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=32)
     eng2.replay(stream)
     got = (
         eng2.read_final().orderBy("conv_id", "turn_idx", "ts")
@@ -148,7 +148,7 @@ def test_rebucket_resume_redoes_groups_invalidated_by_writes(spark, tmpdir_):
     generate_stream(
         stream, StreamSpec(seed=19, n_events=3000, n_epochs=3, evolve_epoch=None)
     )
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     eng.replay(stream, epochs=[0, 1])
     t = eng.table
 
@@ -199,7 +199,7 @@ def test_rebucket_concurrent_commit_not_lost(spark, tmpdir_):
     generate_stream(
         stream, StreamSpec(seed=23, n_events=3000, n_epochs=3, evolve_epoch=None)
     )
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     eng.replay(stream, epochs=[0, 1])
     t = eng.table
 
@@ -214,7 +214,7 @@ def test_rebucket_concurrent_commit_not_lost(spark, tmpdir_):
         if epoch == -2 and not injected["done"]:
             injected["done"] = True
             other = CDCEngine(
-                spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor"
+                spark, os.path.join(tmpdir_, "t"), n_buckets=4
             )
             st = other.replay(stream, epochs=[2])
             assert st["epochs_applied"] == [2]
@@ -238,7 +238,7 @@ def test_rebucket_concurrent_commit_not_lost(spark, tmpdir_):
 
 
 def test_rebucket_keeps_tombstones_blocking_resurrection(spark, tmpdir_):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=2, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=2)
     eng.apply_epoch(make_events(spark, [
         (5, 0, "I", "c1", 0, "user", "hello", None, 0, 0),
         (6, 0, "D", "c1", 0, None, None, None, 0, 1),

@@ -20,9 +20,9 @@ def stream(tmp_path_factory):
     return d
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_replay_matches_oracle(spark, stream, tmpdir_, mode):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, mode), n_buckets=8, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, mode), n_buckets=8)
     res = eng.replay(stream)
     assert res["epochs_applied"] == [0, 1, 2, 3]
     got = (
@@ -36,7 +36,7 @@ def test_replay_matches_oracle(spark, stream, tmpdir_, mode):
 
 
 def test_mor_compaction_preserves_state(spark, stream, tmpdir_):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     eng.replay(stream)
     exp = oracle_final(stream).reset_index(drop=True)
     eng.table.compact(spark)

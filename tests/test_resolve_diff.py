@@ -91,7 +91,7 @@ def test_table_diff_statuses(spark):
 
 def _two_version_table(spark, tmpdir_):
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, root, n_buckets=4)
     eng.apply_epoch(make_events(spark, [
         (10, 0, "I", "c1", 0, "user", "v1", None, 0, 0),
         (11, 0, "I", "c2", 0, "user", "keep", None, 0, 1),
@@ -123,7 +123,7 @@ def test_snapshot_diff_time_travel(spark, tmpdir_):
 
 def test_snapshot_diff_across_schema_evolution(spark, tmpdir_):
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, root, n_buckets=4)
     # epoch 0 WITHOUT the tool column (pre-evolution envelope)
     eng.apply_epoch(
         make_events(spark, [

@@ -5,8 +5,8 @@
 2. streaming exactly-once when one epoch's files span micro-batches
    (maxFilesPerTrigger) — previously the first partial slice committed
    the epoch marker and later slices were silently dropped;
-3. COW merge honors a table's custom key_cols (was hardwired to
-   conv_id/turn_idx);
+3. the delta apply, resolved reads and compaction honor a table's custom
+   key_cols (was hardwired to conv_id/turn_idx);
 4. compaction quarantine write is crash-retry idempotent (overwrite into
    the version-named dir, not append).
 """
@@ -22,7 +22,7 @@ from crba_etl_spark.engine import CDCEngine
 from crba_etl_spark.gen import StreamSpec, generate_stream, oracle_final
 from crba_etl_spark.icelite import CURRENT, IceliteTable
 from crba_etl_spark.operators.asof import asof_join
-from crba_etl_spark.operators.merge import merge_epoch
+from crba_etl_spark.operators.merge import apply_delta_epoch
 from crba_etl_spark.streaming.tail import stream_apply
 
 
@@ -68,7 +68,7 @@ def test_stream_partial_epochs_across_microbatches(spark, tmpdir_):
                        if f.endswith(".parquet")])
         assert n_files >= 2, "fixture must split epochs across files"
 
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     q = stream_apply(
         spark, eng, d, checkpoint_dir=os.path.join(tmpdir_, "ckpt"),
         max_files_per_trigger=1,
@@ -109,7 +109,7 @@ def test_stream_partial_epochs_across_microbatches(spark, tmpdir_):
     pd.testing.assert_frame_equal(got2, exp, check_dtype=False)
 
 
-def test_cow_merge_honors_custom_key_cols(spark, tmpdir_):
+def test_delta_apply_honors_custom_key_cols(spark, tmpdir_):
     root = os.path.join(tmpdir_, "kv")
     schema = T.StructType([
         T.StructField("id", T.StringType(), False),
@@ -120,15 +120,23 @@ def test_cow_merge_honors_custom_key_cols(spark, tmpdir_):
     def batch(rows):
         return spark.createDataFrame(rows, "id string, v string, op string, lsn long")
 
-    merge_epoch(spark, table, batch([("a", "v1", "I", 1), ("b", "v2", "I", 2)]), 0)
-    merge_epoch(spark, table, batch([("a", "v9", "U", 5), ("c", "v3", "I", 6)]), 1)
-    got = {(r.id, r.v) for r in table.read(spark).collect()}
-    assert got == {("a", "v9"), ("b", "v2"), ("c", "v3")}
+    apply_delta_epoch(
+        spark, table, batch([("a", "v1", "I", 1), ("b", "v2", "I", 2)]), 0
+    )
+    apply_delta_epoch(
+        spark, table, batch([("a", "v9", "U", 5), ("c", "v3", "I", 6)]), 1
+    )
+    want = {("a", "v9"), ("b", "v2"), ("c", "v3")}
+    # resolved over base + deltas, then folded into the base
+    assert {(r.id, r.v) for r in table.read(spark).collect()} == want
+    table.compact(spark)
+    assert not any(table.deltas().values())
+    assert {(r.id, r.v) for r in table.read(spark).collect()} == want
 
 
 def test_compact_quarantine_crash_retry_is_idempotent(spark, tmpdir_):
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=4, mode="mor", quarantine="lazy")
+    eng = CDCEngine(spark, root, n_buckets=4, quarantine="lazy")
     eng.apply_epoch(make_events(spark, [
         (10, 0, "I", "c1", 0, "user", "v10", None, 0, 0),
     ]), 0)

@@ -1,19 +1,13 @@
 """Round-3 ADVICE regression tests.
 
-1. (medium) A COW merge's CommitConflict retry must pick up schema
-   columns a CONCURRENT writer added — re-deriving the evolved schema
-   from the fresh base snapshot — or the rewrite projects the new
-   column away from the affected buckets (data loss, not just a stale
-   manifest).
-2. Both commit paths union their schema with the LIVE snapshot's
-   schema, so a delta commit racing a schema evolution can never shrink
-   the manifest schema (MOR commits have no bucket validation to catch
-   this).
-3. (low) An epoch whose completeness becomes known only AFTER its last
+1. The delta commit unions its schema with the LIVE snapshot's schema,
+   so a delta commit racing a schema evolution can never shrink the
+   manifest schema (it has no bucket validation to catch this).
+2. (low) An epoch whose completeness becomes known only AFTER its last
    slice was applied (late ``_DONE``) must still enter
    ``committed_epochs`` — via skip-path promotion (retried slice) or
    the tail's still-open-epoch sweep.
-4. (low) Operator persists are tracked and releasable
+3. (low) Operator persists are tracked and releasable
    (``cache.release_caches``) instead of leaking for the session.
 """
 
@@ -38,60 +32,12 @@ def _with_mood(df, mood):
     return df.withColumn("mood", F.lit(mood))
 
 
-def test_cow_retry_picks_up_concurrent_schema_evolution(spark, tmpdir_):
-    """ADVICE medium: writer B evolves the schema (new column `mood`)
-    and lands a delta in A's affected bucket between A's merge read and
-    commit. A's retry must re-derive the evolved schema from the fresh
-    snapshot: the final table carries `mood` WITH B's value — the old
-    code re-merged under the stale schema and projected it to null."""
-    root = os.path.join(tmpdir_, "t")
-    a = CDCEngine(spark, root, n_buckets=1, mode="cow")
-    b = CDCEngine(spark, root, n_buckets=1, mode="mor")
-
-    fired = {"n": 0}
-    orig = a.table.io.commit_atomic
-
-    def hostile(name, snap, expected_current):
-        if fired["n"] == 0:
-            fired["n"] += 1
-            b.apply_epoch(
-                _with_mood(
-                    make_events(
-                        spark,
-                        [(20, 2, "I", "c2", 0, "user", "evolved row", None, 0, 0)],
-                    ),
-                    "curious",
-                ),
-                2,
-            )
-        return orig(name, snap, expected_current)
-
-    a.table.io.commit_atomic = hostile
-    a.apply_epoch(
-        make_events(spark, [(10, 1, "I", "c1", 0, "user", "merge row", None, 0, 0)]),
-        1,
-    )
-
-    assert fired["n"] == 1
-    snap = a.table.snapshot()
-    assert {1, 2} <= set(snap["committed_epochs"])
-    assert "mood" in [f["name"] for f in snap["schema"]["fields"]]
-    got = {
-        (r.conv_id, r.turn_idx): (r.text, r.mood)
-        for r in a.table.read(spark).collect()
-    }
-    assert got == {
-        ("c1", 0): ("merge row", None),
-        ("c2", 0): ("evolved row", "curious"),
-    }
-
-
 def test_delta_commit_unions_live_schema(spark, tmpdir_):
     """A MOR delta commit carrying a pre-evolution schema must not
     shrink the manifest schema below what the live snapshot already
     has (no bucket validation guards this path)."""
     root = os.path.join(tmpdir_, "t")
-    eng = CDCEngine(spark, root, n_buckets=2, mode="mor")
+    eng = CDCEngine(spark, root, n_buckets=2)
     eng.apply_epoch(
         _with_mood(
             make_events(spark, [(10, 1, "I", "c1", 0, "user", "hello", None, 0, 0)]),
@@ -107,22 +53,17 @@ def test_delta_commit_unions_live_schema(spark, tmpdir_):
         epoch=2, new_bucket_files={}, schema=TRANSCRIPT, stats={}
     )
     assert "mood" in [f.name for f in eng.table.schema().fields]
-    # and the COW path unions too
-    eng.table.commit(
-        epoch=3, new_bucket_files={}, affected=set(), schema=TRANSCRIPT, stats={}
-    )
-    assert "mood" in [f.name for f in eng.table.schema().fields]
     got = eng.table.read(spark).collect()
     assert [(r.conv_id, r.mood) for r in got] == [("c1", "calm")]
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_retried_slice_promotes_epoch_marker(spark, tmpdir_, mode):
     """ADVICE low (tail.py): the last slice of an epoch was applied
     while the epoch was still open (mark_epoch=False); the retried
     slice — now knowing the epoch is complete — skips on its marker but
     MUST promote the epoch into committed_epochs (metadata-only)."""
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode=mode)
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     ev = make_events(spark, [(10, 1, "I", "c1", 0, "user", "hi", None, 0, 0)])
     st = eng.apply_epoch(
         ev, 1, slice_marker="e1:b0", mark_epoch=False, slice_files=["f0"]
@@ -163,7 +104,7 @@ def test_late_done_marker_promotes_via_sweep(spark, tmpdir_):
     parked_e2 = os.path.join(tmpdir_, "parked_epoch2")
     shutil.move(os.path.join(d, "epoch=2"), parked_e2)
 
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     ckpt = os.path.join(tmpdir_, "ckpt")
     q = stream_apply(spark, eng, d, checkpoint_dir=ckpt)
     q.awaitTermination(timeout=300)

@@ -43,7 +43,7 @@ def test_batch_replay_of_open_epoch_keeps_it_open(spark, tmpdir_):
     late = files1[len(files1) // 2 :]
     _park(d1, parked, late + ["_DONE"])  # producer mid-write: no _DONE yet
 
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     r1 = eng.replay(stream)
     assert r1["epochs_applied"] == [0, 1, 2]
     snap = eng.table.snapshot()
@@ -94,7 +94,7 @@ def test_batch_replay_promotes_marker_when_only_done_is_late(spark, tmpdir_):
     parked = os.path.join(tmpdir_, "parked")
     _park(d1, parked, ["_DONE"])
 
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     eng.replay(stream)
     assert set(eng.table.snapshot()["committed_epochs"]) == {0}
 

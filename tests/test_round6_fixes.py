@@ -127,7 +127,7 @@ def test_engine_records_index_config(spark, tmpdir_):
     from conftest import make_events
 
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         dedup_labels=True,
     )
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
@@ -281,7 +281,7 @@ def test_stale_fraction_triggers_auto_rebuild(spark, tmpdir_):
     from crba_etl_spark.operators.text_dedup import N_BANDS, _band_rows, minhash_signatures
 
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         lsh_index=True, stale_rebuild_threshold=0.5,
     )
     base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
@@ -326,7 +326,7 @@ def test_stale_fraction_below_threshold_no_rebuild(spark, tmpdir_):
     from conftest import make_events
 
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         lsh_index=True, stale_rebuild_threshold=0.5,
     )
     t1 = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
@@ -370,7 +370,7 @@ def test_capped_default_residual_is_bounded(spark, tmpdir_):
         sdir, StreamSpec(seed=13, n_events=2000, n_epochs=2, evolve_epoch=None)
     )
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=8,
         dedup_labels=True,  # capped default
     )
     eng.replay(sdir)

@@ -17,12 +17,12 @@ from crba_etl_spark.operators.evolve import (
 from crba_etl_spark.schema import TRANSCRIPT
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_tool_column_appears_mid_stream(spark, tmpdir_, mode):
     # start from the PRE-evolution table schema (no `tool` yet)
     pre = T.StructType([f for f in TRANSCRIPT.fields if f.name != "tool"])
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), payload_schema=pre, n_buckets=4, mode=mode
+        spark, os.path.join(tmpdir_, "t"), payload_schema=pre, n_buckets=4
     )
     eng.apply_epoch(
         make_events(spark, [
@@ -63,14 +63,14 @@ def test_align_to_adds_typed_nulls(spark):
     assert out.collect()[0].turn_idx is None
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_mixed_epoch_replay_old_then_new(spark, tmpdir_, mode):
     """Replaying interleaved old-schema and new-schema epochs converges to
     the evolved schema with correct per-row values (the reference's
     union-of-editions combine, SET-UNION SURVEY.md §2.7)."""
     pre = T.StructType([f for f in TRANSCRIPT.fields if f.name != "tool"])
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), payload_schema=pre, n_buckets=4, mode=mode
+        spark, os.path.join(tmpdir_, "t"), payload_schema=pre, n_buckets=4
     )
     eng.apply_epoch(make_events(spark, [
         (1, 0, "I", "c1", 0, "user", "a", None, 0, 0)], with_tool=False), 0)

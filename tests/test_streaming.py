@@ -20,7 +20,7 @@ def stream(tmp_path_factory):
 
 
 def test_stream_apply_matches_oracle(spark, stream, tmpdir_):
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=8)
     q = stream_apply(
         spark, eng, stream, checkpoint_dir=os.path.join(tmpdir_, "ckpt")
     )
@@ -71,7 +71,7 @@ def test_late_arriving_file_completes_epoch_via_done_marker(spark, tmpdir_):
     parked = os.path.join(tmpdir_, "parked.parquet")
     shutil.move(held, parked)
 
-    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor")
+    eng = CDCEngine(spark, os.path.join(tmpdir_, "t"), n_buckets=4)
     ckpt = os.path.join(tmpdir_, "ckpt")
     q = stream_apply(spark, eng, d, checkpoint_dir=ckpt, max_files_per_trigger=1)
     q.awaitTermination(timeout=300)
@@ -131,7 +131,7 @@ def test_rate_limited_soak_many_triggers(spark, tmpdir_):
     shutil.move(os.path.join(d, "epoch=1", "_DONE"), parked)
 
     eng = CDCEngine(
-        spark, os.path.join(tmpdir_, "t"), n_buckets=4, mode="mor",
+        spark, os.path.join(tmpdir_, "t"), n_buckets=4,
         max_deltas_per_bucket=10_000,  # no compaction mid-soak: keep the
     )                                  # version history pure commit-per-slice
     ckpt = os.path.join(tmpdir_, "ckpt")
